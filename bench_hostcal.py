@@ -52,7 +52,7 @@ def _kernel_worker(args):
     import pandas as pd
     import pyarrow.parquet as pq
 
-    from escp_spark.build import _build_bucket_segment
+    from escp_spark.build import _bucket_postings
 
     # Pre-fault a worker arena once, like warm_python_workers does.
     scratch = np.zeros(32 * 131072, dtype=np.uint64)
@@ -74,10 +74,9 @@ def _kernel_worker(args):
     done = 0
     bucket = 0
     for s in range(0, len(pdf), 7813):
-        sub = pdf.iloc[s : s + 7813].copy()
-        sub["bucket"] = bucket
+        sub = pdf.iloc[s : s + 7813].sort_values("url", kind="mergesort")
+        _bucket_postings(bucket, sub["text"].tolist())
         bucket += 1
-        _build_bucket_segment(sub)
         done += len(sub)
     return done, time.perf_counter() - t0
 

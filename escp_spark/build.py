@@ -5,8 +5,9 @@ Where escp scans an ES index and bulk-writes documents into another ES index
 ``web_pages`` corpus and builds the inverted index itself, Spark-first:
 
   scan → last-write-wins dedup → html→text extraction (Arrow UDF) →
-  deterministic md5 bucketing → per-bucket segment build (applyInPandas,
-  numpy codec) → dictionary/stats aggregation → merge → atomic publish
+  deterministic md5 bucketing → per-bucket docid + segment build (one
+  applyInArrow kernel, numpy codec) → dictionary/stats aggregation →
+  merge → atomic publish
 
 escp behaviors carried over:
 - **Resumable units of work** (esscroll.go:129 + 293-294 "Continue" stub →
@@ -29,9 +30,10 @@ escp behaviors carried over:
   deterministic: latest ``warc_ts`` wins, ties broken by md5(html).
 
 Scale notes (the 10^12-doc design point):
-- One wide shuffle total: the url-hash repartition that co-locates each
-  bucket. Dedup reuses the same hash partitioning (window over url), and
-  docid assignment is a window over the already-clustered data.
+- One wide shuffle over the corpus: the url-hash dedup aggregate, whose
+  output is bucketed and materialized to staging. Per group, one bucket
+  exchange feeds the segment kernel, which assigns docids (url rank
+  within the bucket) and builds postings from a single url sort.
 - The dedup shuffle is materialized once to staging (stage ``shuffle``,
   partitioned by checkpoint group). The CPU-heavy html→text extraction
   runs inside that wide pass by default (``extract_mode="wide"`` —
@@ -40,7 +42,10 @@ Scale notes (the 10^12-doc design point):
   trade bytes for finer extraction-resume granularity. A mid-segment
   failure never recomputes the corpus-wide shuffle, and per-group
   builds re-read a pruned scan.
-- Segment build is ``applyInPandas`` per bucket: memory per task is one
+- Segment build is one ``applyInArrow`` kernel per bucket and one Spark
+  job per group: the kernel writes the bucket's level-0 postings file
+  itself and returns the bucket's docmap rows for Spark's writer (the
+  esbulk worker-writes-its-own-batch analog). Memory per task is one
   bucket's text + postings; choose ``n_buckets`` ≈ corpus_bytes /
   (executor_mem / tasks_per_executor). Buckets are hash-uniform, so no
   straggler buckets (cf. estypes.go:104-116 skew heuristic).
@@ -56,6 +61,7 @@ from __future__ import annotations
 
 import logging
 import os
+import shutil
 from typing import Iterator
 
 import numpy as np
@@ -187,50 +193,32 @@ def prepared_corpus(df: DataFrame, n_buckets: int) -> DataFrame:
 DOCMAP_SCHEMA = "bucket int, url string, doc_id long"
 
 
-def _rank_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("url", kind="mergesort").reset_index(drop=True)
-    base = int(pdf["bucket"].iloc[0]) << DOC_BUCKET_SHIFT
-    return pd.DataFrame(
-        {
-            "bucket": pdf["bucket"],
-            "url": pdf["url"],
-            "doc_id": base + np.arange(len(pdf), dtype=np.int64),
-        }
-    )
-
-
-def docmap_for(df: DataFrame) -> DataFrame:
-    """docid = bucket<<40 | rank(url within bucket) — deterministic and
-    independent of parallelism; the url↔docid table (B4).
-
-    Per-bucket Arrow UDF rank, not a row_number window: the window's
-    whole-corpus JVM sort cost ~600 core-s at 2M docs, while sorting each
-    bucket's urls in pandas is milliseconds. No tokenization here — doc
-    lengths live inline in posting blocks and avgdl derives from the
-    dictionary's Σcf, so nothing tokenizes twice."""
-    return df.select("bucket", "url").groupBy("bucket").applyInPandas(
-        _rank_bucket, DOCMAP_SCHEMA
-    )
-
-
 # --------------------------------------------------------------------------
-# Segment build (applyInPandas per bucket; numpy inside — B5/B6/B7)
+# Segment build: ONE fused per-bucket Arrow kernel (B4 docid assignment +
+# B5/B6/B7 level-0 postings; numpy inside). Like escp's bulk workers
+# (esscroll.go:197-275), each kernel writes its own output — the bucket's
+# level-0 postings file — and reports back the rows the driver needs: the
+# bucket's docmap, which Spark's writer publishes.
 # --------------------------------------------------------------------------
 
-def _build_bucket_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One bucket → encoded posting blocks. Vectorized: one lexsort over
-    all (term, docid) token pairs of the bucket, run-length tf counting,
-    per-term block encoding with the numpy codec."""
-    bucket = int(pdf["bucket"].iloc[0])
-    pdf = pdf.sort_values("url", kind="mergesort").reset_index(drop=True)
+def _bucket_postings(bucket: int, texts: list) -> "pa.Table":
+    """One bucket → encoded level-0 posting blocks (POSTINGS_SCHEMA).
+    ``texts`` are the bucket's docs in doc_id order (url-sorted), so doc
+    i gets doc_id = bucket<<40 | i. Vectorized: one sort over all
+    (term, doc) token pairs of the bucket, run-length tf counting, one
+    encode pass over every term's blocks with the numpy codec."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(POSTINGS_SCHEMA)
     base = np.uint64(bucket) << np.uint64(DOC_BUCKET_SHIFT)
-    doc_ids = base + np.arange(len(pdf), dtype=np.uint64)
+    doc_ids = base + np.arange(len(texts), dtype=np.uint64)
 
-    tok_lists = [tokenize(t or "") for t in pdf["text"]]
+    tok_lists = [tokenize(t or "") for t in texts]
     dls = np.array([len(t) for t in tok_lists], dtype=np.uint64)
     total = int(dls.sum())
     if total == 0:
-        return pd.DataFrame({f.name: pd.Series(dtype="object") for f in POSTINGS_SCHEMA})
+        return schema.empty_table()
 
     all_terms = np.empty(total, dtype=object)
     pos = 0
@@ -249,7 +237,7 @@ def _build_bucket_segment(pdf: pd.DataFrame) -> pd.DataFrame:
     # the bottleneck of this kernel.)
     term_codes, term_uniques = pd.factorize(all_terms, sort=True)
     del all_terms
-    n_docs_b = len(pdf)
+    n_docs_b = len(texts)
     doc_idx = np.repeat(np.arange(n_docs_b, dtype=np.int64), dls.astype(np.int64))
     key = term_codes.astype(np.int64) * n_docs_b + doc_idx
     key.sort()
@@ -267,28 +255,109 @@ def _build_bucket_segment(pdf: pd.DataFrame) -> pd.DataFrame:
 
     # One vectorized pass encodes every term's blocks (no per-term loop).
     enc = encode_posting_frame(u_term, u_doc, tf, u_dl)
-    out = pd.DataFrame(
-        {
-            "bucket": np.full(enc["n"].size, bucket, dtype=np.int64),
-            "term": np.asarray(term_uniques)[enc["term_code"]],
-            "block_id": enc["block_id"],
-            "n": enc["n"],
-            "doc_id_lo": enc["doc_id_lo"],
-            "doc_id_hi": enc["doc_id_hi"],
-            "max_tf": enc["max_tf"],
-            "min_dl": enc["min_dl"],
-            "sum_tf": enc["sum_tf"],
-            "doc_ids": enc["doc_ids"],
-            "tfs": enc["tfs"],
-            "dls": enc["dls"],
-        }
+    cols = dict(enc, bucket=np.full(enc["n"].size, bucket),
+                term=np.asarray(term_uniques)[enc["term_code"]])
+    return pa.Table.from_arrays(
+        [pa.array(cols[f.name], f.type) for f in schema], schema=schema
     )
-    return out[[f.name for f in POSTINGS_SCHEMA]]
 
 
-def build_segments(df: DataFrame) -> DataFrame:
-    """Per-bucket level-0 segment build. Input: url, bucket, text."""
-    return df.groupBy("bucket").applyInPandas(_build_bucket_segment, POSTINGS_SCHEMA)
+# Columns whose parquet min/max stats the level-0 files keep: every
+# reader of level-0 scans it whole, and min/max of the varint payloads
+# would only bloat the footers.
+_L0_STATS_COLS = [
+    f.name for f in POSTINGS_SCHEMA if not isinstance(f.dataType, T.BinaryType)
+]
+
+
+def _segment_kernel(l0_dir: str, compression: str):
+    """The per-bucket kernel of segment_and_docmap, bound to its output
+    directory: sort the bucket's urls once (doc_id = bucket<<40 | rank),
+    build its postings, write them to ``l0_dir/part-b<bucket>.parquet``
+    and return its docmap rows. The file lands under a hidden ``.tmp-*``
+    name (invisible to Spark's and pyarrow's dataset listings) and is
+    renamed into place, so a retried task attempt just replaces it with
+    identical content. A bucket whose docs all tokenize to nothing still
+    gets an (empty) file and its docmap rows."""
+
+    def kernel(tbl):
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        tbl = tbl.sort_by("url")  # urls are unique (LWW-deduped) per bucket
+        bucket = tbl.column("bucket")[0].as_py()
+        postings = _bucket_postings(bucket, tbl.column("text").to_pylist())
+        tmp = os.path.join(l0_dir, f".tmp-{uuid.uuid4().hex}")
+        pq.write_table(
+            postings, tmp, compression=compression,
+            # parquet-mr's default zstd level, as Spark's writer uses.
+            compression_level=3 if compression == "zstd" else None,
+            write_statistics=_L0_STATS_COLS, store_schema=False,
+        )
+        os.replace(tmp, os.path.join(l0_dir, f"part-b{bucket}.parquet"))
+        base = bucket << DOC_BUCKET_SHIFT
+        return pa.table({
+            "bucket": tbl.column("bucket"),
+            "url": tbl.column("url"),
+            "doc_id": pa.array(
+                base + np.arange(tbl.num_rows, dtype=np.int64), pa.int64()
+            ),
+        })
+
+    return kernel
+
+
+def segment_and_docmap(df: DataFrame, l0_dir: str) -> DataFrame:
+    """Per-bucket segment build over ``url, bucket, text``: running the
+    returned DataFrame writes every bucket's level-0 postings under
+    ``l0_dir`` (which must exist, on a filesystem the executors share)
+    and yields the url↔docid table (B4) — one bucket exchange and one
+    url sort per bucket for both outputs.
+
+    docid = bucket<<40 | rank(url within bucket): deterministic and
+    independent of parallelism. A per-bucket Arrow kernel, not a
+    row_number window: the window's whole-corpus JVM sort cost ~600
+    core-s at 2M docs, while sorting each bucket's urls is milliseconds.
+    Doc lengths live inline in the posting blocks and avgdl derives from
+    the dictionary's Σcf, so nothing tokenizes twice."""
+    # _balanced_shuffle_partitions models this exchange with Spark's
+    # hashInt — valid only while bucket_expr keeps its int cast (a long
+    # key would hash with hashLong and silently unbalance the plan).
+    bucket_type = df.schema["bucket"].dataType
+    assert isinstance(bucket_type, T.IntegerType), (
+        f"bucket must be IntegerType, got {bucket_type}"
+    )
+    codec = df.sparkSession.conf.get(
+        "spark.sql.parquet.compression.codec", "zstd"
+    )
+    kernel = _segment_kernel(
+        l0_dir, "none" if codec == "uncompressed" else codec
+    )
+    return (
+        df.select("url", "bucket", "text")
+        .groupBy("bucket")
+        .applyInArrow(kernel, DOCMAP_SCHEMA)
+    )
+
+
+def write_segment_group(df: DataFrame, seg_path: str, dm_path: str) -> None:
+    """Build one resumable unit (a build group or a stream epoch) as ONE
+    Spark job: segment_and_docmap writes the level-0 postings under
+    ``seg_path`` and Spark's writer puts the returned docmap rows at
+    ``dm_path``. The docmap lands at its final location, clustered by
+    doc_id (each bucket's rows come out url-sorted), so publish is
+    zero-copy — which matters when the docmap has 10^12 rows. Clearing
+    ``seg_path`` first keeps the unit-scoped overwrite: a rerun never
+    inherits a crashed attempt's files."""
+    shutil.rmtree(seg_path, ignore_errors=True)
+    os.makedirs(seg_path)
+    (
+        segment_and_docmap(df, seg_path).write.mode("overwrite")
+        .option("parquet.block.size", str(DOCMAP_ROW_GROUP_BYTES))
+        .parquet(dm_path)
+    )
 
 
 # --------------------------------------------------------------------------
@@ -452,9 +521,9 @@ def _murmur3_int32(x: int, seed: int = 42) -> int:
 
 def _balanced_shuffle_partitions(key_groups: list[list[int]],
                                  default_n: int) -> int:
-    """Pick the shuffle-partition count for the per-bucket kernel stages.
+    """Pick the shuffle-partition count for the per-bucket kernel stage.
 
-    ``groupBy("bucket").applyInPandas`` hash-partitions ~P atomic bucket
+    ``groupBy("bucket").applyInArrow`` hash-partitions ~P atomic bucket
     kernels into spark.sql.shuffle.partitions bins; with P keys in P
     bins, balls-into-bins puts 3-4 buckets on one task — a 3-4×
     straggler on an otherwise perfectly uniform stage (guide §2.5,
@@ -462,8 +531,10 @@ def _balanced_shuffle_partitions(key_groups: list[list[int]],
     bins than keys). Spark's key→partition map is pmod(Murmur3(key), n),
     known driver-side, so scan n ∈ [default_n, 3·default_n] and take the
     smallest n minimizing the worst per-group max-load (each group's
-    segment/docmap jobs see only that group's buckets). Beyond 3× the
+    segment job sees only that group's buckets). Beyond 3× the
     empty-task scheduling overhead outweighs the remaining load-2 tail.
+    The model assumes an int bucket key (hashInt); segment_and_docmap
+    asserts the column type.
     """
     # With keys ≫ bins the hash balance is already smooth (relative load
     # variance ~ 1/sqrt(keys/bins)) and the scan would cost O(n·keys)
@@ -499,7 +570,9 @@ last_build_timings: dict = {}
 # scaling harness records this at BOTH parallelism levels; diffing the
 # two decomposes the parallelism-independent fixed cost f that sets the
 # small-corpus efficiency ceiling (VERDICT r05 next-#2: f ≈ 27 s at 2M
-# docs — "instrument once, then cut the top item").
+# docs — "instrument once, then cut the top item"). The segment stage has
+# one key, ``segment_postings``: its one job per group writes both the
+# level-0 postings and the docmap (there is no ``segment_docmap`` key).
 last_build_detail: dict = {}
 
 import contextlib as _contextlib
@@ -697,7 +770,6 @@ def _write_dictionary(spark, layout: IndexLayout, stats: DataFrame | None,
     within partitions so dictionary row-group footer stats stay
     seek-friendly for the serving path's filtered scans."""
     if driver_pdf is not None:
-        import shutil
         import uuid
 
         import pyarrow as pa
@@ -1095,7 +1167,7 @@ def build_index(
       it whole (dedup+extract are one stage), after it per-group resume
       applies as usual.
     - ``"fused"``: staging stores html; extraction re-runs inside each
-      group's segment stage (Catalyst prunes text out of the docmap job).
+      group's segment stage, on the group-scan tasks.
       Wide-pass failures no longer redo extraction work, per-group
       failures redo only that group's extraction. Costs reading html per
       group instead of the (smaller) text.
@@ -1302,12 +1374,10 @@ def build_index(
 
         _mark("extract")
 
-    # ---- Stage "segment": per-group docmap + level-0 segment build,
-    # idempotent group-scoped writes, ledger commit per group. In the
-    # fused (default) path this stage also extracts: the docmap job
-    # never computes the UDF (Catalyst prunes the text column — it only
-    # needs url+bucket) and the segment job extracts on the group-scan
-    # tasks right before the bucket shuffle.
+    # ---- Stage "segment": per-group docmap + level-0 segment build in
+    # one job (write_segment_group), idempotent group-scoped writes,
+    # ledger commit per group. In the fused path this stage also
+    # extracts, on the group-scan tasks right before the bucket shuffle.
     done = committed_groups(spark, layout, "segment", resume_key)
 
     def _group_input(g: int) -> DataFrame:
@@ -1327,21 +1397,11 @@ def build_index(
         # files and the fused extraction runs on the scan tasks — the
         # default 128 MB bin-packing would collapse a group to a couple
         # of tasks and serialize the Arrow UDF.
-        # docmap group files are written straight to their final location
-        # (clustered by doc_id via the window's output order) — publish is
-        # zero-copy, which matters when the docmap has 10^12 rows.
-        dm_path = os.path.join(layout.docmap, f"group={g}")
-        with _detail("segment_docmap"):
-            (
-                docmap_for(part).write.mode("overwrite")
-                .option("parquet.block.size", str(DOCMAP_ROW_GROUP_BYTES))
-                .parquet(dm_path)
-            )
         seg_path = os.path.join(layout.postings_l0, f"group={g}")
         with _detail("segment_postings"):
-            build_segments(part.select("url", "bucket", "text")).write.mode(
-                "overwrite"
-            ).parquet(seg_path)
+            write_segment_group(
+                part, seg_path, os.path.join(layout.docmap, f"group={g}")
+            )
         docs_g = int(grp_counts.get(g, 0))
         with _detail("segment_ledger"):
             bytes_g = _dir_bytes(seg_path)  # FS listing, no Spark job

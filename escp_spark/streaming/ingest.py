@@ -38,11 +38,10 @@ from ..build import (
     DOC_BUCKET_SHIFT,
     _ledger_append,
     bucket_expr,
-    build_segments,
     dedup_last_write_wins,
-    docmap_for,
     extract_text_udf,
     merge_segments,
+    write_segment_group,
 )
 from ..sources.tables import IndexLayout, publish_manifest
 
@@ -326,17 +325,16 @@ def _ingest_epoch(batch_df: DataFrame, epoch: int, layout: IndexLayout,
             spark, layout, prepared, epoch, n_buckets
         )
 
-    from ..build import DOCMAP_ROW_GROUP_BYTES
-
+    # One job, so the prepared plan (dedup + extract + bloom verify)
+    # runs once; a replayed epoch overwrites its own group.
     dm_path = os.path.join(layout.docmap, f"group=e{epoch}")
-    (
-        docmap_for(prepared).write.mode("overwrite")
-        .option("parquet.block.size", str(DOCMAP_ROW_GROUP_BYTES))
-        .parquet(dm_path)
-    )
     seg_path = os.path.join(layout.postings_l0, f"group=e{epoch}")
-    build_segments(prepared).write.mode("overwrite").parquet(seg_path)
-    docs = spark.read.parquet(dm_path).count()
+    write_segment_group(prepared, seg_path, dm_path)
+    # Doc count from the docmap footers (exact, driver-side) — no
+    # count job over the just-written group.
+    import pyarrow.dataset as pads
+
+    docs = pads.dataset(dm_path, format="parquet").count_rows()
     # Fold this epoch's urls into the bloom sidecar (distributed bitmap
     # OR over the just-written — epoch-sized — docmap group; replaying
     # an epoch re-ORs the same bits, which is idempotent). Once n_added

@@ -126,6 +126,54 @@ def test_docids_unique_and_bucketed(spark, built_index):
     assert bad == 0
 
 
+def test_bucket_with_no_tokens_still_indexed(spark, tiny_corpus, tmp_path):
+    """A bucket whose docs all tokenize to nothing has no postings, but
+    the segment kernel must still return its docmap rows and write an
+    (empty) level-0 file that the merge reads; the index validates."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from escp_spark.analyzer import wrap_html
+    from escp_spark.build import build_index
+    from escp_spark.corpus import hash_md5_int
+    from escp_spark.sources.tables import IndexLayout
+    from escp_spark.validate import validate_index
+
+    n_buckets, empty_bucket = 4, 2
+    t = pq.read_table(tiny_corpus).to_pydict()
+    silent = [hash_md5_int(u) % n_buckets == empty_bucket for u in t["url"]]
+    t["text"] = ["!!! ---" if s else x for s, x in zip(silent, t["text"])]
+    t["html"] = [
+        wrap_html(f"page {u}", x) if s else h
+        for s, u, x, h in zip(silent, t["url"], t["text"], t["html"])
+    ]
+    src = str(tmp_path / "silent_bucket.parquet")
+    pq.write_table(pa.table(t, schema=pq.read_schema(tiny_corpus)), src)
+
+    d = str(tmp_path / "idx_silent")
+    m = build_index(spark, src, d, n_buckets=n_buckets, max_segments=2,
+                    n_groups=2)
+    layout = IndexLayout(d, m["build_id"])
+    l0_file = os.path.join(layout.postings_l0, f"group={empty_bucket % 2}",
+                           f"part-b{empty_bucket}.parquet")
+    assert pq.read_metadata(l0_file).num_rows == 0
+    assert any(f.endswith(l0_file) for f in
+               spark.read.parquet(layout.postings_l0).inputFiles())
+    dm = spark.read.parquet(layout.docmap)
+    n_silent = len({u for u, s in zip(t["url"], silent) if s})
+    assert n_silent > 0
+    assert dm.filter(F.col("bucket") == empty_bucket).count() == n_silent
+    postings = spark.read.parquet(layout.postings)
+    assert postings.filter(
+        F.shiftright("doc_id_lo", 40) == empty_bucket
+    ).count() == 0
+    res = validate_index(spark, src, d, sample_denom=1)
+    assert res.checked == res.total == res.matched == m["n_docs"]
+
+
 def test_spark_batch_path_small_k_bounded_topk(spark, built_index):
     """The partition-local top-k cut (query.py local_topk) is rank-safe:
     small k on a hot term — where the cut actually discards candidates —

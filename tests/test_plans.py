@@ -74,17 +74,33 @@ def test_batch_path_result_is_local_no_docmap_scan(spark, built_index):
     assert len(reader._dm_cache._d) <= len(rows)
 
 
-def test_no_per_row_python_anywhere(spark, built_index, tiny_corpus):
+def test_no_per_row_python_anywhere(spark, built_index, tiny_corpus, tmp_path):
     """input_hint bans per-row Python: the build plan may contain Arrow
-    operators (ArrowEvalPython / FlatMapGroupsInPandas) but never
+    operators (ArrowEvalPython / FlatMapGroupsInArrow) but never
     BatchEvalPython."""
-    from escp_spark.build import build_segments, prepared_corpus
+    from escp_spark.build import prepared_corpus, segment_and_docmap
     from escp_spark.sources.tables import read_web_pages
 
     pages = read_web_pages(spark, tiny_corpus)
     corpus = prepared_corpus(pages, 8)
     assert_no_python_in_plan(corpus)
-    assert_no_python_in_plan(build_segments(corpus.select("url", "bucket", "text")))
+    plan = assert_no_python_in_plan(segment_and_docmap(corpus, str(tmp_path)))
+    assert "FlatMapGroupsInArrow" in plan, plan[:4000]
+
+
+def test_segment_kernel_requires_int_bucket(spark, tiny_corpus, tmp_path):
+    """_balanced_shuffle_partitions models the segment exchange with
+    Spark's hashInt; a bucket column widened to long (hashLong) must be
+    refused, not silently mis-modeled."""
+    from escp_spark.build import prepared_corpus, segment_and_docmap
+    from escp_spark.sources.tables import read_web_pages
+
+    corpus = prepared_corpus(read_web_pages(spark, tiny_corpus), 8)
+    with pytest.raises(AssertionError, match="IntegerType"):
+        segment_and_docmap(
+            corpus.withColumn("bucket", F.col("bucket").cast("long")),
+            str(tmp_path),
+        )
 
 
 def test_relational_queries_no_python(spark):

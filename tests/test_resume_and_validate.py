@@ -68,6 +68,61 @@ def test_resume_skips_committed_and_is_identical(spark, tiny_corpus, tmp_path):
     assert _index_content(spark, d_interrupted) == _index_content(spark, d_clean)
 
 
+def _seg_dir_bytes(path):
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path) for f in files
+    )
+
+
+def test_resume_overwrites_stale_level0_files(spark, tiny_corpus, tmp_path):
+    """A pending group's level-0 dir may hold leftovers of a crashed
+    attempt: a hidden half-written ``.tmp-*`` file and a stray
+    ``part-b*.parquet``. Resuming must clear them (group-scoped
+    overwrite): the index equals a clean build, Spark's level-0 listing
+    never includes the tmp file, and each committed group's ledger bytes
+    equal its directory's bytes."""
+    import shutil
+
+    d_resumed = str(tmp_path / "idx_stale")
+    d_clean = str(tmp_path / "idx_stale_clean")
+    with pytest.raises(SimulatedFailure):
+        build_index(
+            spark, tiny_corpus, d_resumed,
+            n_buckets=8, max_segments=3, n_groups=4, fail_after_groups=2,
+        )
+    layout = IndexLayout(d_resumed, "build0")
+    committed = os.path.join(layout.postings_l0, "group=0")
+    pending = os.path.join(layout.postings_l0, "group=3")
+    os.makedirs(pending, exist_ok=True)
+    stray = os.path.join(pending, "part-b99.parquet")
+    shutil.copy(os.path.join(committed, sorted(os.listdir(committed))[0]), stray)
+    tmp_file = os.path.join(pending, ".tmp-crashed-attempt")
+    with open(tmp_file, "wb") as f:
+        f.write(b"half-written parquet")
+
+    def l0_files():
+        return spark.read.parquet(layout.postings_l0).inputFiles()
+
+    assert any("part-b99" in f for f in l0_files())
+    assert not any(".tmp-" in f for f in l0_files())
+
+    build_index(
+        spark, tiny_corpus, d_resumed,
+        n_buckets=8, max_segments=3, n_groups=4,
+    )
+    assert not os.path.exists(stray) and not os.path.exists(tmp_file)
+    assert not any(".tmp-" in f or "part-b99" in f for f in l0_files())
+    seg = read_ledger(spark, layout).filter(F.col("stage") == "segment")
+    rows = seg.select("segment_path", "bytes").collect()
+    assert len(rows) == 4
+    for r in rows:
+        assert r.bytes == _seg_dir_bytes(r.segment_path), r.segment_path
+
+    build_index(spark, tiny_corpus, d_clean, n_buckets=8, max_segments=3, n_groups=4)
+    assert _index_content(spark, d_resumed) == _index_content(spark, d_clean)
+
+
 def test_resume_mid_extract_skips_committed_groups(spark, tiny_corpus, tmp_path):
     """Kill after 1 of 4 EXTRACT groups (the most expensive stage);
     rerun must skip the committed shuffle stage and the committed
