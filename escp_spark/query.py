@@ -435,9 +435,7 @@ class IndexReader:
                     sc["rg"].to_numpy(dtype=np.int64).tolist(),
                 ))
                 # Nullable-Int64 sidecar (r07): doc ids stay integral
-                # end-to-end — no float64 leg (exact past 2^53). A
-                # legacy double-typed sidecar still loads (float64
-                # series; fillna/to_numpy below behave as before).
+                # end-to-end — no float64 leg (exact past 2^53).
                 lo_ser, hi_ser = sc["doc_lo"], sc["doc_hi"]
                 has = lo_ser.notna().to_numpy(dtype=bool)
                 always = np.flatnonzero(~has).astype(np.int64)

@@ -55,7 +55,6 @@ import pandas as pd
 
 SIDECAR_NAME = "rg_stats"
 _META_NAME = "_meta.json"
-_LEGACY_SIDECAR = "rg_stats.parquet"  # round-5 monolithic layout
 
 PAYLOAD_COLS = ("doc_ids", "tfs", "dls")
 
@@ -293,9 +292,6 @@ def write_rg_sidecar(layout, spark=None) -> int:
     with open(os.path.join(tmp, _META_NAME), "w") as f:
         json.dump(meta, f)
     _swap_dir(tmp, os.path.join(root, SIDECAR_NAME))
-    legacy = os.path.join(root, _LEGACY_SIDECAR)
-    if os.path.exists(legacy):
-        os.remove(legacy)
     return total_rows
 
 
@@ -358,11 +354,17 @@ def load_rg_sidecar(index_dir: str, kind: str,
             import pyarrow as pa
 
             # doc_lo/doc_hi load as NULLABLE Int64 (not float64-with-NaN)
-            # so doc ids stay exact past 2^53; legacy double-typed
-            # sidecars simply come back float64 as before.
-            pdf = pads.dataset(shards, format="parquet").to_table().to_pandas(
-                types_mapper={pa.int64(): pd.Int64Dtype()}.get
-            )
+            # so doc ids stay exact past 2^53; every other column keeps
+            # its plain dtype.
+            tbl = pads.dataset(shards, format="parquet").to_table()
+            nullable = {pa.int64(): pd.Int64Dtype()}.get
+            pdf = pd.DataFrame({
+                name: tbl.column(name).to_pandas(
+                    types_mapper=nullable
+                    if name in ("doc_lo", "doc_hi") else None
+                )
+                for name in tbl.column_names
+            })
         except Exception:
             return None
     if len(pdf) != meta["n_rows"]:

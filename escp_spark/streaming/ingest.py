@@ -399,13 +399,12 @@ def stream_ingest_once(spark: SparkSession, source_dir: str, index_dir: str,
 
 def _stats_and_publish(spark: SparkSession, layout: IndexLayout,
                        max_segments: int, consolidation_shift: int,
-                       total_tokens: int | None = None,
+                       total_tokens: int,
                        prior: dict | None = None) -> dict:
     """Publish corpus stats + manifest — shared by finalize and
     compaction. ``total_tokens`` (Σcf) comes from the dictionary write
     that merge_segments / finalize fused into their level-0 stats pass
-    (VERDICT r04 #4 — no separate published-postings re-scan); when
-    None (defensive fallback) it is read back from the dictionary.
+    (VERDICT r04 #4 — no separate published-postings re-scan).
     ``prior`` (the pre-compaction manifest) carries identity/lineage
     fields — n_buckets, input_snapshot, source_filter — so compacting a
     BATCH-built index doesn't rewrite them to streaming defaults."""
@@ -419,11 +418,6 @@ def _stats_and_publish(spark: SparkSession, layout: IndexLayout,
     import pyarrow.dataset as pads
 
     n_docs = pads.dataset(layout.docmap, format="parquet").count_rows()
-    if total_tokens is None:
-        total_tokens = (
-            spark.read.parquet(layout.dictionary).agg(F.sum("cf"))
-            .collect()[0][0] or 0
-        )
     # Refresh the serving-metadata sidecar at every (re)publish so
     # long-lived readers never fall back to the per-reader footer walk.
     from ..sidecar import write_rg_sidecar
@@ -459,7 +453,7 @@ def finalize_streamed_index(spark: SparkSession, index_dir: str,
     the force-merge + refresh-restore lifecycle step (D3/D5). Cheap and
     epoch-incremental-friendly: modulo segment placement, no tail
     consolidation (fragmentation grows with epochs — run
-    ``compact_streamed_index`` periodically to reset it)."""
+    ``compact_index`` periodically to reset it)."""
     layout = IndexLayout(index_dir, build_id)
     # Segment assignment must not depend on a fixed bucket count (epochs
     # keep adding effective buckets), so merge with modulo placement.
@@ -577,8 +571,3 @@ def compact_index(spark: SparkSession, index_dir: str,
         # the anti-join verify resolves them correctly (conservative).
         clear_tombstones(index_dir)
     return manifest
-
-
-# Back-compat name: compaction was first wired for streamed indexes
-# only; the implementation is layout-agnostic (see compact_index).
-compact_streamed_index = compact_index

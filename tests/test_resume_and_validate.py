@@ -5,7 +5,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from escp_spark.build import SimulatedFailure, build_index, read_ledger
+from escp_spark.build import (
+    SimulatedFailure, _ledger_pandas, build_index, read_ledger,
+)
 from escp_spark.sources.tables import IndexLayout
 from escp_spark.validate import ValidationError, validate_index
 
@@ -36,9 +38,10 @@ def _index_content(spark, index_dir, build_id="build0"):
 
 def test_resume_skips_committed_and_is_identical(spark, tiny_corpus, tmp_path):
     """Kill after 2 of 4 groups; rerun; committed groups must NOT
-    re-execute (file mtimes unchanged) and the final index must be
-    content-identical to an uninterrupted build (esscroll.go:129 /
-    293-294 realized)."""
+    re-execute (file mtimes unchanged), the committed wide shuffle must
+    not re-run (staging untouched, one shuffle commit per group) and the
+    final index must be content-identical to an uninterrupted build
+    (esscroll.go:129 / 293-294 realized)."""
     d_interrupted = str(tmp_path / "idx_resume")
     d_clean = str(tmp_path / "idx_clean")
 
@@ -53,6 +56,9 @@ def test_resume_skips_committed_and_is_identical(spark, tiny_corpus, tmp_path):
     assert committed == 2
     before = _file_mtimes(layout.postings_l0)
     assert before, "no level-0 segment files after partial build"
+    shuffled_dir = os.path.join(layout.staging, "shuffled")
+    before_shuffle = _file_mtimes(shuffled_dir)
+    assert before_shuffle, "no shuffle staging files after partial build"
 
     # Resume: remaining 2 groups run, committed 2 are skipped untouched.
     build_index(
@@ -62,7 +68,15 @@ def test_resume_skips_committed_and_is_identical(spark, tiny_corpus, tmp_path):
     after = _file_mtimes(layout.postings_l0)
     for p, m in before.items():
         assert after.get(p) == m, f"committed segment file was rewritten: {p}"
-    assert read_ledger(spark, layout).filter(F.col("stage") == "segment").count() == 4
+    assert _file_mtimes(shuffled_dir) == before_shuffle, (
+        "resume re-ran the wide shuffle pass"
+    )
+    led = read_ledger(spark, layout)
+    assert led.filter(F.col("stage") == "segment").count() == 4
+    # Raw ledger rows (read_ledger dedups): one shuffle commit per group.
+    raw = _ledger_pandas(layout)
+    shuffle_groups = sorted(raw.loc[raw["stage"] == "shuffle", "partition_id"])
+    assert shuffle_groups == [0, 1, 2, 3], shuffle_groups
 
     build_index(spark, tiny_corpus, d_clean, n_buckets=8, max_segments=3, n_groups=4)
     assert _index_content(spark, d_interrupted) == _index_content(spark, d_clean)
@@ -121,49 +135,6 @@ def test_resume_overwrites_stale_level0_files(spark, tiny_corpus, tmp_path):
 
     build_index(spark, tiny_corpus, d_clean, n_buckets=8, max_segments=3, n_groups=4)
     assert _index_content(spark, d_resumed) == _index_content(spark, d_clean)
-
-
-def test_resume_mid_extract_skips_committed_groups(spark, tiny_corpus, tmp_path):
-    """Kill after 1 of 4 EXTRACT groups (the most expensive stage);
-    rerun must skip the committed shuffle stage and the committed
-    extract group (files untouched), re-run only the remaining groups,
-    and produce an index content-identical to a clean build
-    (VERDICT r02 #3: extract-stage resume granularity)."""
-    d_interrupted = str(tmp_path / "idx_xresume")
-    d_clean = str(tmp_path / "idx_xclean")
-
-    with pytest.raises(SimulatedFailure):
-        build_index(
-            spark, tiny_corpus, d_interrupted,
-            n_buckets=8, max_segments=3, n_groups=4,
-            fail_after_extract_groups=1,
-        )
-    layout = IndexLayout(d_interrupted, "build0")
-    led = read_ledger(spark, layout)
-    assert led.filter(F.col("stage") == "shuffle").count() == 4
-    assert led.filter(F.col("stage") == "extract").count() == 1
-    assert led.filter(F.col("stage") == "segment").count() == 0
-    shuffled_dir = os.path.join(layout.staging, "shuffled")
-    committed_extract = os.path.join(layout.staging, "extracted", "grp=0")
-    before_shuffle = _file_mtimes(shuffled_dir)
-    before_extract = _file_mtimes(committed_extract)
-    assert before_shuffle and before_extract
-
-    build_index(
-        spark, tiny_corpus, d_interrupted,
-        n_buckets=8, max_segments=3, n_groups=4, extract_mode="staged",
-    )
-    assert _file_mtimes(shuffled_dir) == before_shuffle, (
-        "resume re-ran the wide shuffle pass"
-    )
-    for p, m in before_extract.items():
-        assert _file_mtimes(committed_extract).get(p) == m, (
-            f"committed extract group rewritten: {p}"
-        )
-    led = read_ledger(spark, layout)
-    assert led.filter(F.col("stage") == "extract").count() == 4
-    build_index(spark, tiny_corpus, d_clean, n_buckets=8, max_segments=3, n_groups=4)
-    assert _index_content(spark, d_interrupted) == _index_content(spark, d_clean)
 
 
 def test_rerun_of_published_index_is_noop_fast(spark, built_index, tiny_corpus):

@@ -41,6 +41,26 @@ def test_reader_uses_sidecar_and_stays_rank_identical(spark, built_index,
             assert s == pytest.approx(es, abs=1e-6)
 
 
+def test_sidecar_load_keeps_plain_dtypes_except_doc_ids(spark, built_index):
+    """Only doc_lo/doc_hi load as nullable Int64 (doc ids stay exact past
+    2^53); payload_bytes, which is never null, stays plain int64."""
+    import numpy as np
+    import pandas as pd
+
+    from escp_spark.query import IndexReader
+    from escp_spark.sidecar import load_rg_sidecar
+
+    d, _ = built_index
+    reader = IndexReader(d)
+    for kind, files in (("postings", reader._pfiles),
+                        ("docmap", reader._dm_files)):
+        pdf = load_rg_sidecar(d, kind, files)
+        assert pdf is not None and len(pdf), kind
+        assert pdf["payload_bytes"].dtype == np.dtype("int64"), kind
+        assert pdf["doc_lo"].dtype == pd.Int64Dtype(), kind
+        assert pdf["doc_hi"].dtype == pd.Int64Dtype(), kind
+
+
 def test_sidecar_reader_opens_no_files_for_metadata(spark, tiny_corpus,
                                                     tmp_path):
     """An index with hundreds of row groups: building both interval
@@ -246,7 +266,7 @@ def test_republish_refreshes_sidecar(spark, stream_source, tmp_path):
 
     from escp_spark.query import IndexReader
     from escp_spark.streaming import (
-        compact_streamed_index,
+        compact_index,
         finalize_streamed_index,
         stream_ingest_once,
     )
@@ -267,7 +287,7 @@ def test_republish_refreshes_sidecar(spark, stream_source, tmp_path):
     assert r1.rg_index_source == "sidecar"
     assert r1.dm_index_source == "sidecar"
 
-    compact_streamed_index(spark, idx, max_segments=3)
+    compact_index(spark, idx, max_segments=3)
     r2 = IndexReader(idx)
     r2._rg_stats()
     r2._dm_rg_index()
